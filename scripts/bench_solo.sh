@@ -5,6 +5,9 @@
 # separable. Writes BENCH_SOLO.json {query: coldSec}.
 #
 # Usage: scripts/bench_solo.sh [sfDir] [q1,q2,...]
+# Each entry is passed to graft.Bench as SPARK_GRAFT_ONLY, which
+# selects the query of that exact name (or `<entry>_*`), so give full
+# names or unique ids. SPARK_GRAFT_CPUS sets the cores (default: all).
 # Default queries: the round-5 weak cluster + the heaviest stable
 # sweep entries.
 set -u
@@ -29,7 +32,7 @@ for q in ${QS//,/ }; do
   # excluded; only this query's first execution is measured)
   (cd "$TMPD" && SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_ONLY="$q" SPARK_GRAFT_REPEAT=1 \
     java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-24g} \
-      -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+      -Dspark.ui.enabled=false \
       -cp "$OLDPWD/$CP" graft.Bench > solo_out.txt 2> solo_err.txt)
   t=$(python3 -c "
 import json,sys

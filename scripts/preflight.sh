@@ -2,8 +2,9 @@
 # Pre-pause / pre-commit gate: never end a turn with a red build.
 #
 # Usage: scripts/preflight.sh [q_names]
-#   q_names  optional comma-separated query list (e.g. "q237,q238") to
-#            smoke through graft.Verify + scripts/check.py at sf0.001.
+#   q_names  optional comma-separated query list (e.g. "q237,q238";
+#            an entry selects its exact name or `<entry>_*`) to smoke
+#            through graft.Verify + scripts/check.py at sf0.001.
 #            Without it, only compilation (main + test) is checked.
 #
 # Exit code 0 = safe to commit/pause; anything else = fix first.

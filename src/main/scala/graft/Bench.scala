@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main: runs every declared query on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line.
@@ -10,64 +9,9 @@ import org.apache.spark.sql.SparkSession
   * write evaluates the full output rows while measuring zero sink IO.
   */
 object Bench {
-  /** Input-size-derived shuffle parallelism:
-    * clamp(ceil(bytes / target MB), min(cpus, 8), 4*cpus). Every
-    * declared query is partition-count invariant (the oracle gate
-    * runs at 4, the driver benches at 32 and 8), so this only moves
-    * orchestration cost, never results. The floor keeps a minimum
-    * fan-out for stages whose CPU outweighs their bytes (measured:
-    * the PQ/Lloyd recall audits run ~2x slower at 1 partition than 8,
-    * while 1 vs 8 is a wash everywhere else at sf0.1); the byte term
-    * owns the decision as soon as input outgrows 8 target-sized
-    * partitions (~1 GB), and the cap bounds a huge input on a small
-    * deploy exactly like AQE coalescing would.
-    */
-  def derivePartitions(sfDir: String, cpus: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", {
-      val targetMb = sys.env.getOrElse("SPARK_GRAFT_PART_MB", "128").toLong
-      val bytes =
-        try {
-          val s = java.nio.file.Files.walk(java.nio.file.Paths.get(sfDir))
-          try s.filter(java.nio.file.Files.isRegularFile(_))
-            .mapToLong(java.nio.file.Files.size(_)).sum()
-          finally s.close()
-        } catch { case _: Throwable => 0L }
-      val derived = (bytes + targetMb * (1L << 20) - 1) / (targetMb * (1L << 20))
-      val floor = math.min(cpus.toInt, 8)
-      math.max(floor.toLong, math.min(derived, 4L * cpus.toInt)).toString
-    })
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // Scale-ADAPTIVE reduce parallelism (guide §2.2: size partitions
-      // by bytes, not a constant): partitions = ceil(inputBytes /
-      // target) clamped to [1, 4*cpus]. The old constant (= cpus) was
-      // tuned for neither scale: at sf0.1 (18 MB input) every exchange
-      // fans 32 ~KB-sized tasks per stage and scheduling dominates
-      // (the r9 driver's own 8-cpu sweep beat its 32-cpu sweep 175 s
-      // vs 266 s on identical code); at 100 TB it would undersize
-      // partitions 6 orders of magnitude. Deploys retune via
-      // SPARK_GRAFT_PART_MB (target partition size, default 128 MB —
-      // guide §2.2's 100 MB-1 GB band) or pin SPARK_GRAFT_SHUFFLE.
-      .config("spark.sql.shuffle.partitions", Bench.derivePartitions(sfDir, cpus))
-      // AQE stays off HERE only: at bench scale every stage is
-      // milliseconds and adaptive stage boundaries add ~15% (measured
-      // 64.6 s -> 74.0 s at sf0.1; the iterative q70 doubles). The
-      // deploy-facing session (api.Graft.sparkSession) enables AQE —
-      // at 100 TB runtime re-planning (skew-join splitting, partition
-      // coalescing) is the correct posture. SPARK_GRAFT_AQE=true
-      // re-measures that trade locally (r9 re-check — the off-default
-      // measurement predates the many-tiny-stage Lloyd/recall queries).
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(sfDir)
     // Per-query attribution (see BenchDiag scaladoc): splits wall time
     // into task-run/CPU/GC/spill vs outside-task time so a sweep
     // anomaly like round 5's 50x series-window phantom is self-
@@ -77,14 +21,7 @@ object Bench {
     // JVM/codegen warmup so the first measured query isn't charged
     // for executor + whole-stage-codegen compilation.
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    // Local profiling aid: SPARK_GRAFT_ONLY=q66,q29 restricts the run
-    // (substring match); the driver never sets it, so per-round bench
-    // behavior is unchanged.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val selected = only match {
-      case Some(pats) => SparkEntry.allQueries.filter(q => pats.exists(q.name.contains))
-      case None => SparkEntry.allQueries
-    }
+    val selected = Harness.selected
     // Best-of-N per query. Default 2: one-shot timings in a shared
     // 145-query JVM charge GC/heap state from earlier queries to
     // whoever runs next (round 4 showed 2-10x phantom "regressions"
@@ -98,7 +35,7 @@ object Bench {
     // 5.2 s driver vs 0.37 s same-HEAD builder); re-running the repeat
     // usually lands in a calm window. Bounded so a persistently-
     // starved environment can't stall the sweep.
-    val maxExtra = sys.env.get("SPARK_GRAFT_STARV_RETRY").map(_.toInt).getOrElse(2)
+    val maxExtra = 2
     // Signature: material wall (>=1.5 s — sub-second queries can't be
     // meaningfully inflated and ratio noise would trigger retry
     // storms), taskRun > 3x taskCpu, GC < 10% of run, no spill.
@@ -124,17 +61,17 @@ object Bench {
       val recs = scala.collection.mutable.ArrayBuffer.empty[BenchDiag.Rec]
       val runs = scala.collection.mutable.ArrayBuffer.empty[(Double, Boolean)]
       def runOnce(): Unit = {
-        // each repeat builds a fresh plan, so a query's internal
-        // persist() registers a new cache entry per repeat — drop the
-        // previous repeat's entries so repeats are memory-identical
-        spark.catalog.clearCache()
         org.apache.spark.GraftListenerFlush.flush(spark.sparkContext)
         val ts0 = diag.snapshot
         val gc0 = BenchDiag.driverGcMs; val cpu0 = BenchDiag.processCpuMs
         val t0 = System.nanoTime()
         try {
-          q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
+          // the scope releases this repeat's persists after the clock
+          // stops, so every repeat starts from the same memory state
+          val dt = CacheScope.run(spark.sparkContext) {
+            q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            (System.nanoTime() - t0) / 1e9
+          }
           org.apache.spark.GraftListenerFlush.flush(spark.sparkContext)
           val rec = BenchDiag.Rec((dt * 1000).toLong, diag.snapshot - ts0,
             BenchDiag.driverGcMs - gc0, BenchDiag.processCpuMs - cpu0)
@@ -175,22 +112,6 @@ object Bench {
           (if (isStream) triggerWaitQs else starvedQs) += q.name
           ok.map(_._1).min
         } else -1.0
-      // scope caches per query: intra-query persists (self-join
-      // intermediates) stay effective, but nothing leaks into the
-      // next query's memory budget — in a 69-query session the
-      // accumulated MEMORY_AND_DISK relations would otherwise evict
-      // unpredictably at larger SF
-      spark.catalog.clearCache()
-      // clearCache only drops catalog-tracked relations; RDD-level
-      // blocks (iterative ops' localCheckpoints, layered-frontier
-      // persists) stay pinned until GC and stack up across a
-      // 146-query sweep — drop them explicitly
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      // memory-sink tables from streaming queries hold their full
-      // result in driver heap behind a temp view — drop them too
-      spark.catalog.listTables().collect()
-        .filter(_.isTemporary).foreach(t => spark.catalog.dropTempView(t.name))
-      spark.experimental.extraOptimizations = Nil // scope rules per query
       q.name -> dt
     }
     // The harness keeps only the LAST ~2000 chars of output, and the

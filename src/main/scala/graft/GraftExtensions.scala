@@ -6,12 +6,13 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** `SparkSessionExtensions` installer — the ONE config entry point for
-  * the whole graft Catalyst tier. On a cluster:
-  * `--conf spark.sql.extensions=graft.GraftExtensions`; on an
-  * already-running session: [[GraftExtensions.register]] (functions)
-  * plus `spark.experimental.extraOptimizations` /
-  * `extraStrategies` (rules and the as-of strategy).
+/** `SparkSessionExtensions` installer — the ONE entry point for the
+  * whole graft Catalyst tier, applied once when a session is built:
+  * [[graft.api.Graft.sparkSession]] passes it to `withExtensions`, and
+  * a cluster deploy sets
+  * `--conf spark.sql.extensions=graft.GraftExtensions`. Queries never
+  * install rules themselves. [[GraftExtensions.register]] adds only the
+  * functions to a session built elsewhere.
   *
   * Installs:
   * - SQL-callable native expressions:

@@ -40,20 +40,28 @@ object Graft {
       series: Series, sampleRate: Double,
       sampleRates: Option[DataFrame] = None)
 
-  /** Session defaults tuned for the engine: AQE on (skew-join +
-    * coalescing) — shuffle partitions come from the deploy (set
-    * explicitly in local mode). `nanosAsLong` is pinned at BUILD time
-    * (one of `events.parquet`'s physical encodings is
-    * TIMESTAMP(NANOS), which Spark 4 otherwise rejects); it is a
-    * session-wide read setting, so it belongs here, not inside a
-    * table accessor ([[graft.sources.Tables.events]] asserts it).
+  /** The one session builder of the engine. It installs the graft
+    * Catalyst tier ([[graft.GraftExtensions]]: native SQL functions,
+    * [[graft.plans.OverlapJoinRewrite]], [[graft.plans.InferScanBounds]]
+    * and the as-of join strategy) once, at build, so no query has to
+    * touch session state. AQE is on by default (skew-join splitting
+    * and partition coalescing are the right posture at scale); the
+    * bench profile ([[graft.Harness.session]]) turns it off. Shuffle
+    * partitions come from the deploy (set explicitly in local mode).
+    * `nanosAsLong` is pinned at BUILD time (one of `events.parquet`'s
+    * physical encodings is TIMESTAMP(NANOS), which Spark 4 otherwise
+    * rejects); it is a session-wide read setting, so it belongs here,
+    * not inside a table accessor ([[graft.sources.Tables.events]]
+    * asserts it).
     */
-  def sparkSession(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession =
+  def sparkSession(master: String = "local[*]", shufflePartitions: Int = 32,
+      adaptive: Boolean = true): SparkSession =
     SparkSession.builder()
       .master(master)
       .appName("graft")
+      .withExtensions(new graft.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.enabled", adaptive)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()

@@ -543,7 +543,9 @@ object CorpusOps {
        |WHERE c.neg_id <> c.doc_id
        |ORDER BY c.doc_id, c.k""".stripMargin) { (spark, dir) =>
     val ids = docs(spark, dir).select("doc_id")
-    val n = lit(ids.agg(max("doc_id")).head().getLong(0) + 1)
+    // coalesce: max over zero documents is NULL; any modulus serves
+    // there, since no candidate row exists to take it
+    val n = lit(ids.agg(coalesce(max("doc_id"), lit(0L))).head().getLong(0) + 1)
     val cand = ids
       .select(col("doc_id"), explode(array(lit(0L), lit(1L))).as("k"))
       .withColumn("neg_id", graft.functions.TextHash.base32Builtin(

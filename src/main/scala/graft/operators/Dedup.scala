@@ -509,7 +509,9 @@ object Dedup {
       .scopedPersist()
     var converged = false
     var rounds = 0
-    var labSum = labels.agg(sum("lab")).head().getLong(0)
+    // coalesce: the sum over a zero-row label set is NULL, not 0
+    def labelSum(l: DataFrame) = l.agg(coalesce(sum("lab"), lit(0L))).head().getLong(0)
+    var labSum = labelSum(labels)
     while (!converged && rounds < 20) {
       val step = labels
         .unionAll(edges.join(labels, edges("a") === labels("d"))
@@ -521,7 +523,7 @@ object Dedup {
       val next =
         if ((rounds + 1) % graft.operators.Graphs.CheckpointEvery == 0) graft.CacheScope.checkpoint(step)
         else step.scopedPersist()
-      val nextSum = next.agg(sum("lab")).head().getLong(0)
+      val nextSum = labelSum(next)
       labels.unpersist()
       labels = next
       converged = labSum == nextSum

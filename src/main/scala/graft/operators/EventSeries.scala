@@ -716,8 +716,10 @@ object EventSeries {
     * the predicate is written on the DERIVED seconds axis
     * (`t = (ts div 1000)/1e6`), which alone reaches the parquet scan
     * only as an opaque expression filter — zero row-group pruning at
-    * 100 TB. The rule conjoins the implied raw `ts` bound so
-    * `PushedFilters` carries a real range (pinned in PlanRewriteSpec);
+    * 100 TB. The rule, installed when the session is built
+    * ([[graft.api.Graft.sparkSession]]), conjoins the implied raw `ts`
+    * bound so `PushedFilters` carries a real range (pinned in
+    * PlanRewriteSpec);
     * results are oracle-identical because the inferred bound is
     * redundant with the original predicate.
     */
@@ -729,7 +731,6 @@ object EventSeries {
          |FROM (${Tables.seriesSql})
          |WHERE t BETWEEN $lo AND $hi
          |ORDER BY user_id, event_id""".stripMargin) { (spark, dir) =>
-      spark.experimental.extraOptimizations = Seq(graft.plans.InferScanBounds)
       SeriesOps.timeSlice(Tables.series(spark, dir),
           SeriesOps.Series(Seq("user_id"), "t", Seq("event_id")), lo, hi)
         .select("user_id", "event_id", "t", "value")

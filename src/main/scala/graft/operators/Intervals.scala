@@ -101,9 +101,9 @@ object Intervals {
   }
 
   /** The SAME overlap semantics as q113 (different burst threshold:
-    * ≥2 consecutive events) but written as the NAIVE theta join — the
-    * [[graft.plans.OverlapJoinRewrite]] optimizer rule turns it into
-    * the bucketed hash join at plan time. This is the end-to-end drive
+    * ≥2 consecutive events) but written as the NAIVE theta join —
+    * [[graft.plans.OverlapJoinRewrite.Forced]] rewrites its analyzed
+    * plan into the bucketed hash join. This is the end-to-end drive
     * of the Catalyst rewrite tier: user writes the quadratic-looking
     * predicate, the optimizer produces the 100 TB-safe plan, and the
     * DuckDB oracle (the plain theta join) pins the semantics.
@@ -125,17 +125,20 @@ object Intervals {
          |FROM ei e JOIN pi p ON e.s0 <= p.e0 AND p.s0 <= e.e0
          |  AND e.user_id <> p.user_id
          |ORDER BY l_user_id, l_start, r_user_id, r_start""".stripMargin) { (spark, dir) =>
-      spark.experimental.extraOptimizations =
-        Seq(graft.plans.OverlapJoinRewrite.Forced)
       val errors = bursts(spark, dir, "error", 2L)
         .select(col("user_id").as("l_user_id"), col("start").as("l_start"),
           col("end").as("l_end"))
       val buys = bursts(spark, dir, "purchase", 2L)
         .select(col("user_id").as("r_user_id"), col("start").as("r_start"),
           col("end").as("r_end"))
-      errors.join(buys, // the naive theta join — the rule rewrites it
+      val naive = errors.join(buys,
           col("l_start") <= col("r_end") && col("r_start") <= col("l_end") &&
           col("l_user_id") =!= col("r_user_id"))
+      // the sides would broadcast at small SF, where the installed
+      // size-guarded rule leaves the join alone: apply the forced
+      // instance to this one plan instead of to the session
+      org.apache.spark.sql.graft.bridge.ofRows(spark,
+          graft.plans.OverlapJoinRewrite.Forced(naive.queryExecution.analyzed))
         .orderBy("l_user_id", "l_start", "r_user_id", "r_start")
     }
   }

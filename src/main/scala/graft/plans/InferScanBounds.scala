@@ -36,8 +36,9 @@ import org.apache.spark.sql.types._
   * Fires only on deterministic chains over Int/Long/Double attributes
   * with foldable numeric literals; idempotent (an already-present
   * semantically-equal conjunct is never re-added). Installed together
-  * with [[OverlapJoinRewrite]] by [[GraftExtensions]], or per-session
-  * via `spark.experimental.extraOptimizations`.
+  * with [[OverlapJoinRewrite]] by [[graft.GraftExtensions]] when
+  * [[graft.api.Graft.sparkSession]] builds the session; q124 relies on
+  * that install rather than adding the rule itself.
   */
 object InferScanBounds extends Rule[LogicalPlan] with PredicateHelper {
 

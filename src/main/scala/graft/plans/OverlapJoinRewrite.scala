@@ -48,10 +48,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType, NumericType}
   * used by tests and small-SF drives). It is idempotent: the
   * rewritten join has an equi conjunct, so it no longer matches.
   *
-  * Install EITHER via config
-  * `spark.sql.extensions=graft.GraftExtensions` (new sessions)
-  * or at runtime via
-  * `spark.experimental.extraOptimizations = Seq(OverlapJoinRewrite)`.
+  * Installed at session build by [[graft.GraftExtensions]]
+  * ([[graft.api.Graft.sparkSession]] does it).
   */
 class OverlapJoinRewriteRule(alwaysRewrite: Boolean) extends Rule[LogicalPlan]
     with PredicateHelper {
@@ -62,11 +60,12 @@ class OverlapJoinRewriteRule(alwaysRewrite: Boolean) extends Rule[LogicalPlan]
     val bucketSec = conf.getConfString(BucketConf, "86400").toDouble
     if (bucketSec <= 0) return plan // rule disabled
     plan.transform {
-      case j @ Join(left, right, Inner, Some(cond), hint) if eligible(j) =>
+      case j @ Join(left, right, Inner, Some(cond), hint) =>
+        // shape first: only an overlap join pays for the size stats
         overlapBounds(left, right, splitConjunctivePredicates(cond)) match {
-          case Some((ls, le, rs, re)) =>
+          case Some((ls, le, rs, re)) if eligible(j) =>
             rewrite(left, right, cond, ls, le, rs, re, hint, bucketSec)
-          case None => j
+          case _ => j
         }
     }
   }
@@ -136,11 +135,10 @@ class OverlapJoinRewriteRule(alwaysRewrite: Boolean) extends Rule[LogicalPlan]
   }
 }
 
-/** The default instance (size-guarded); `Forced` always rewrites —
-  * for small-SF drives where the sides would broadcast. Neither
-  * mutates session state: install per-session via
-  * `spark.experimental.extraOptimizations` (the graft harness resets
-  * that between queries, like `clearCache`).
+/** The default instance (size-guarded), the one the session installs;
+  * `Forced` always rewrites. Neither mutates session state: q123
+  * applies `Forced` to its own analyzed join, so small-SF drives
+  * where the sides would broadcast still exercise the rewrite.
   */
 object OverlapJoinRewrite extends OverlapJoinRewriteRule(false) {
   val BucketConf = "spark.graft.overlapJoin.bucketSec"

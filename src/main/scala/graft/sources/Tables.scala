@@ -37,9 +37,9 @@ object Tables {
   }
 
   /** The nanos read setting is session-wide, so it is pinned at
-    * session BUILD ([[graft.api.Graft.sparkSession]] and every main
-    * set it); a table accessor mutating session conf would be a
-    * global side effect hidden inside a read. This assert turns a
+    * session BUILD ([[graft.api.Graft.sparkSession]] sets it); a table
+    * accessor mutating session conf would be a global side effect
+    * hidden inside a read. This assert turns a
     * forgotten config into a loud, actionable failure instead of an
     * opaque parquet conversion error mid-scan.
     */
@@ -146,11 +146,7 @@ object Tables {
     * Batch-only: streaming plans keep their source partitioning.
     */
   def spread(df: DataFrame, key: String): DataFrame = {
-    // kill-switch for A/Bs and deploys where the source layout is
-    // known-good: -Dgraft.spread=off / SPARK_GRAFT_SPREAD=off
-    val enabled = sys.props.get("graft.spread")
-      .orElse(sys.env.get("SPARK_GRAFT_SPREAD")).forall(_ != "off")
-    if (!enabled || df.isStreaming) return df
+    if (df.isStreaming) return df
     val cores = df.sparkSession.sparkContext.defaultParallelism
     // physical-plan partition count of the (scan) subtree — computed
     // at plan-build time, no job runs

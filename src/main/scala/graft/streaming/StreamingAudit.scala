@@ -88,11 +88,7 @@ object StreamingAudit {
 
   def run(spark: SparkSession, dir: String,
       sinkName: String = "stream_burst"): DataFrame = {
-    val q = burstStream(spark, dir).writeStream
-      .format("memory").queryName(sinkName).outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+    MemorySink.drain(burstStream(spark, dir), sinkName)
   }
 
   /** Declared streaming query — shares q167's oracle verbatim (a
@@ -160,11 +156,7 @@ object StreamingAudit {
 
   def runChisq(spark: SparkSession, dir: String,
       sinkName: String = "stream_chisq"): DataFrame = {
-    val q = langCountStream(spark, dir).writeStream
-      .format("memory").queryName(sinkName).outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+    MemorySink.drain(langCountStream(spark, dir), sinkName)
   }
 
   /** q194: the q189 independence audit maintained AT INGEST — keyed
@@ -261,11 +253,7 @@ object StreamingAudit {
 
   def runGini(spark: SparkSession, dir: String,
       sinkName: String = "stream_gini"): DataFrame = {
-    val q = giniStream(spark, dir).writeStream
-      .format("memory").queryName(sinkName).outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+    MemorySink.drain(giniStream(spark, dir), sinkName)
   }
 
   /** Streaming twin of q202 — shares its oracle (single-batch state
@@ -351,11 +339,7 @@ object StreamingAudit {
 
   def runHazard(spark: SparkSession, dir: String,
       sinkName: String = "stream_hazard"): DataFrame = {
-    val q = hazardStream(spark, dir).writeStream
-      .format("memory").queryName(sinkName).outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+    MemorySink.drain(hazardStream(spark, dir), sinkName)
   }
 
   /** Streaming twin of q185: the observation stream rolled through

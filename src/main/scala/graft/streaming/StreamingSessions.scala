@@ -144,14 +144,7 @@ object StreamingSessions {
     * file) events table and return the collected result table.
     */
   def run(spark: SparkSession, dir: String, sinkName: String = "stream_sessions"): DataFrame = withStateShuffle(spark, 8) {
-    val q = sessionStream(spark, dir).writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("append")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+    MemorySink.drain(sessionStream(spark, dir), sinkName)
   }
 
   /** Declared streaming query — oracle-checked against the SAME SQL
@@ -197,11 +190,7 @@ object StreamingSessions {
           .as("total"))
       .select(col("user_id"), col("window.start").cast("long").as("day_start"),
         col("n"), col("total"))
-    val q = agg.writeStream
-      .format("memory").queryName(sinkName).outputMode("complete").start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+    MemorySink.drain(agg, sinkName, "complete")
   }
 
   val q64StreamWindowed: graft.QueryDef = graft.QueryDef.sql(
@@ -233,11 +222,7 @@ object StreamingSessions {
       .parquet(dir)
       .select(graft.functions.TextHash.base32(col("text")).as("thash"))
     val agg = stream.groupBy("thash").agg(count(lit(1)).as("n_copies"))
-    val q = agg.writeStream
-      .format("memory").queryName(sinkName).outputMode("complete").start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+    MemorySink.drain(agg, sinkName, "complete")
   }
 
   val q73StreamDedup: graft.QueryDef = graft.QueryDef.sql(
@@ -265,11 +250,7 @@ object StreamingSessions {
         size(split(col("text"), " ")).cast("long").as("n_words"))
     val agg = stream.groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("n_words").as("n_tokens"))
-    val q = agg.writeStream
-      .format("memory").queryName(sinkName).outputMode("complete").start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+    MemorySink.drain(agg, sinkName, "complete")
   }
 
   val q79StreamMixture: graft.QueryDef = graft.QueryDef.sql(
@@ -307,11 +288,7 @@ object StreamingSessions {
       .join(broadcast(bench), Seq("h"), "left")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_sh"), count(col("hit")).as("n_hit"))
-    val q = stream.writeStream
-      .format("memory").queryName(sinkName).outputMode("complete").start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+    MemorySink.drain(stream, sinkName, "complete")
   }
 
   val q83StreamContamination: graft.QueryDef = {
@@ -349,11 +326,7 @@ object StreamingSessions {
     */
   def runStreamJoin(spark: SparkSession, dir: String,
       sinkName: String = "stream_joined"): DataFrame = withStateShuffle(spark, 8) {
-    val q = streamJoined(spark, dir).writeStream
-      .format("memory").queryName(sinkName).outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+    MemorySink.drain(streamJoined(spark, dir), sinkName)
   }
 
   /** The joined streaming relation behind [[runStreamJoin]], exposed
@@ -480,17 +453,13 @@ object StreamingSessions {
     */
   def runFunnel(spark: SparkSession, dir: String,
       sinkName: String = "stream_funnel"): DataFrame = withStateShuffle(spark, 8) {
-    val q = funnelStream(spark, dir).writeStream
-      .format("memory").queryName(sinkName).outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
     // upsert the append-mode sink by user BEFORE aggregating: each
     // micro-batch re-emits a touched user's current row, so a
     // multi-batch run has one row per (user, batch). Funnel fields
     // are monotone (None -> Some, then frozen), so max() over the
     // user's rows IS the latest state — the same upsert contract
     // StreamingSpec drives through foreachBatch.
-    spark.table(sinkName)
+    MemorySink.drain(funnelStream(spark, dir), sinkName)
       .groupBy("user_id")
       .agg(max("t_view").as("t_view"), max("t_click").as("t_click"),
         max("t_buy").as("t_buy"))
@@ -580,14 +549,7 @@ object StreamingSessions {
 
   def runEwma(spark: SparkSession, dir: String,
       sinkName: String = "stream_ewma"): DataFrame = withStateShuffle(spark, 8) {
-    val q = ewmaStream(spark, dir).writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("append")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+    MemorySink.drain(ewmaStream(spark, dir), sinkName)
   }
 
   /** Streaming twin of q110 — verified by the SAME bit-exact
@@ -677,14 +639,7 @@ object StreamingSessions {
 
   def runKalman(spark: SparkSession, dir: String,
       sinkName: String = "stream_kalman"): DataFrame = withStateShuffle(spark, 8) {
-    val q = kalmanStream(spark, dir).writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("append")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+    MemorySink.drain(kalmanStream(spark, dir), sinkName)
   }
 
   /** Streaming twin of q180 — verified by the SAME bit-exact
@@ -775,11 +730,7 @@ object StreamingSessions {
 
   def runScd2(spark: SparkSession, dir: String,
       sinkName: String = "stream_scd2"): DataFrame = withStateShuffle(spark, 8) {
-    val q = scd2Stream(spark, dir).writeStream
-      .format("memory").queryName(sinkName).outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+    MemorySink.drain(scd2Stream(spark, dir), sinkName)
   }
 
   /** Streaming twin of q207 — a single-batch run's emissions equal

@@ -90,11 +90,7 @@ object StreamingSketch {
 
   def run(spark: SparkSession, dir: String,
       sinkName: String = "stream_kmv"): DataFrame = {
-    val q = kmvStream(spark, dir).writeStream
-      .format("memory").queryName(sinkName).outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+    MemorySink.drain(kmvStream(spark, dir), sinkName)
   }
 
   /** Declared streaming query — the oracle is q84's sequential SQL
@@ -206,11 +202,7 @@ object StreamingSketch {
 
   def runDau(spark: SparkSession, dir: String,
       sinkName: String = "stream_dau"): DataFrame = {
-    val q = dauStream(spark, dir).writeStream
-      .format("memory").queryName(sinkName).outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+    MemorySink.drain(dauStream(spark, dir), sinkName)
   }
 
   /** Declared streaming query: per-day distinct-user estimates from

@@ -76,11 +76,7 @@ object StreamingVectors {
 
   def run(spark: SparkSession, dir: String,
       sinkName: String = "stream_ivf_monitor"): DataFrame = {
-    val q = distortionStream(spark, dir).writeStream
-      .format("memory").queryName(sinkName).outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+    MemorySink.drain(distortionStream(spark, dir), sinkName)
   }
 
   /** Declared streaming query: one batch over the whole table emits

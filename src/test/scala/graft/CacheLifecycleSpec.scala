@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.GraftExpressionBridge
 import org.scalatest.funsuite.AnyFunSuite
 
-/** No-leaked-cache guard (VERDICT r7 task 2): every declared query,
-  * run under its own [[CacheScope]], must leave the session exactly as
-  * cached as it found it — WITHOUT the harness's blanket
-  * clearCache/unpersist-all. This is the library-caller contract: an
+/** No-leaked-state guard: every declared query, run under its own
+  * [[CacheScope]], must leave the session exactly as cached as it
+  * found it, with the same optimizer rules, temp views and conf —
+  * WITHOUT any blanket clearCache/unpersist-all between queries (no
+  * main has one). This is the library-caller contract: an
   * api.Vectors / api.Corpus user wrapping one call in
   * `CacheScope.run` must not accumulate cached relations.
   *
@@ -29,7 +30,11 @@ class CacheLifecycleSpec extends AnyFunSuite {
     spark.catalog.clearCache()
     val baseline = sc.getPersistentRDDs.keySet.toSet
     val leaks = scala.collection.mutable.ArrayBuffer.empty[String]
+    def tempViews = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
     SparkEntry.allQueries.foreach { q =>
+      val rules0 = spark.experimental.extraOptimizations
+      val views0 = tempViews
+      val conf0 = spark.conf.getAll
       CacheScope.run(sc) {
         val df = q.fn(spark, dir)
         val cachedAtBuild = !GraftExpressionBridge.cacheManagerIsEmpty(spark) ||
@@ -43,6 +48,13 @@ class CacheLifecycleSpec extends AnyFunSuite {
         leaks += s"${q.name}: CacheManager entry survived the scope"
       if (CacheScope.lastSweep.leftUntracked > 0)
         leaks += s"${q.name}: ${CacheScope.lastSweep.leftUntracked} persist(s) bypassed CacheScope (left pinned: the thread-owned sweep deliberately does not touch them)"
+      // no query leaves session state behind either: rules, views, conf
+      if (spark.experimental.extraOptimizations != rules0)
+        leaks += s"${q.name}: extraOptimizations changed to ${spark.experimental.extraOptimizations}"
+      if (tempViews != views0)
+        leaks += s"${q.name}: temp views changed: +${tempViews -- views0} -${views0 -- tempViews}"
+      if (spark.conf.getAll != conf0)
+        leaks += s"${q.name}: session conf changed: ${spark.conf.getAll.toSet diff conf0.toSet}"
       // clean up between queries so one leak doesn't cascade the report
       sc.getPersistentRDDs.values
         .filter(r => !baseline.contains(r.id)).foreach(_.unpersist(blocking = false))

@@ -228,6 +228,7 @@ class PlanRewriteSpec extends AnyFunSuite {
       assert(!phys.contains("BroadcastNestedLoopJoin"), phys)
       assert(!phys.contains("CartesianProduct"), phys)
       assert(df.count() > 0)
+      assert(spark.experimental.extraOptimizations.isEmpty, "q123 installed a session rule")
     } finally spark.experimental.extraOptimizations = Nil
   }
 }

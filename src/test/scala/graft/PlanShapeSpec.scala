@@ -171,7 +171,6 @@ class PlanShapeSpec extends AnyFunSuite {
         spark.catalog.clearCache()
         try plan(q.name).contains("BroadcastNestedLoopJoin")
         catch { case _: Throwable => false }
-        finally spark.experimental.extraOptimizations = Nil // q123/q124 scope
       }
     assert(offenders.isEmpty,
       s"unexpected BNLJ in: ${offenders.map(_.name).mkString(", ")}")
@@ -246,7 +245,6 @@ class PlanShapeSpec extends AnyFunSuite {
         direct || cached
       }
       catch { case _: Throwable => false }
-      finally spark.experimental.extraOptimizations = Nil
     }
     val offenders = SparkEntry.allQueries
       .filterNot(_.name.contains("stream")) // streaming plans need a sink
